@@ -425,8 +425,9 @@ def test_scaling_artifact_carries_the_blocking_frontier():
     narrative states — 1-probe dedup-grade recall decays with scale
     while 2-probe stays strictly above it at ~4x candidate mass."""
     import json
+    import os
 
-    with open("/root/repo/SCALING_CURVES.json") as f:
+    with open(os.path.join(os.path.dirname(__file__), "..", "SCALING_CURVES.json")) as f:
         art = json.load(f)
     pts = art["sweeps"]["fixture"]["centroid_recall"]
     assert len(pts) >= 4

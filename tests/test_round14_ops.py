@@ -324,7 +324,7 @@ def test_clustered_frontier_artifact_floors():
     mass (the alternative) is 5.7x larger and growing ~n^1.8."""
     import json
 
-    with open("/root/repo/SCALING_CURVES.json") as f:
+    with open(os.path.join(os.path.dirname(__file__), "..", "SCALING_CURVES.json")) as f:
         art = json.load(f)
     pts = sorted(
         art["sweeps"]["emb_shape_clustered"]["centroid_recall"],

@@ -275,7 +275,7 @@ def test_sampled_trainer_artifact_octave_facts():
     import json
     import math
 
-    with open("/root/repo/SCALING_CURVES.json") as f:
+    with open(os.path.join(os.path.dirname(__file__), "..", "SCALING_CURVES.json")) as f:
         art = json.load(f)
     pts = {
         p["scale"]: p
